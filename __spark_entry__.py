@@ -2961,7 +2961,7 @@ def q_kg_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 + S12 + A6 behind a strict oracle: the graph-materialize sink
     round trip.  The docstring quad table — unioned with a FULL copy of
     itself, which the sink's SO1 set semantics must collapse
-    (`materialize.dedup_quads`; reference: rdflib quad-set collapse in
+    (`materialize_triples`' dedup; reference: rdflib quad-set collapse in
     `/root/reference/src/utils.py:465-470`) — is written through
     `materialize_triples` (observe() totals + the per-(pred,bucket)
     lineage table, A6/S8's single-table merge sink), then read BACK off

@@ -8,12 +8,23 @@ the north rule.  Predicate cardinality is the fixed edge vocabulary
 within a predicate so hub subjects don't produce giant files and
 SPARQL-style per-predicate scans prune to one directory.
 
-Set semantics (SO1): rdflib collapses duplicate quads per graph — here a
-`dropDuplicates` over the full quad key before the write.
+Set semantics (SO1): rdflib collapses duplicate quads per graph — here
+one exchange, `repartition("pred_name", "subj_bucket")` on the two layout
+columns, followed by a `dropDuplicates` over the full quad key plus those
+columns.  The layout columns are functions of `pred` and `subj`, so the
+key is the same set, and the aggregate reuses the exchange instead of
+adding a second shuffle on the quad key.  Every (pred_name, subj_bucket)
+directory is then written by exactly one task, as exactly one file; AQE
+still sizes the exchange (no fixed partition count).  Write parallelism
+is therefore bounded by the number of directories, which `buckets`
+scales.
 
-Lineage (north rule): `observe()` counters for totals + a per-partition
-row-count table written next to the data, so a resumed job can verify
-partition completeness without rescanning.
+Lineage (north rule): one `Observation` on the write carries the totals
+(`n_triples`, and the HyperLogLog++ `n_graphs`/`n_subjects`, which are
+order-independent and so equal an `approx_count_distinct` over the
+table), so no stats pass re-scans the written table.  A per-partition
+row-count table is written next to the data as one file, so a resumed
+job can verify partition completeness; `n_partitions` is its row count.
 """
 
 from __future__ import annotations
@@ -42,6 +53,17 @@ def dedup_quads(triples: DataFrame) -> DataFrame:
     return triples.dropDuplicates(TRIPLE_COLS)
 
 
+def _layout_quads(triples: DataFrame, buckets: int) -> DataFrame:
+    """Quads plus the two layout columns, deduplicated behind the one
+    exchange that also partitions them for the write."""
+    return (
+        triples.withColumn("pred_name", pred_short_name(F.col("pred")))
+        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
+        .repartition("pred_name", "subj_bucket")
+        .dropDuplicates([*TRIPLE_COLS, "pred_name", "subj_bucket"])
+    )
+
+
 def materialize_triples(
     triples: DataFrame,
     out_path: str,
@@ -52,11 +74,11 @@ def materialize_triples(
     as `_metrics.json` beside the table)."""
     t0 = time.time()
     obs = Observation("materialize")
-    df = (
-        dedup_quads(triples)
-        .withColumn("pred_name", pred_short_name(F.col("pred")))
-        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
-        .observe(obs, F.count(F.lit(1)).alias("n_triples"))
+    df = _layout_quads(triples, buckets).observe(
+        obs,
+        F.count(F.lit(1)).alias("n_triples"),
+        F.approx_count_distinct("graph").alias("n_graphs"),
+        F.approx_count_distinct("subj").alias("n_subjects"),
     )
     (
         df.write.mode(mode)
@@ -68,20 +90,17 @@ def materialize_triples(
     metrics["wall_sec"] = round(time.time() - t0, 3)
     metrics["buckets"] = buckets
 
-    # per-partition lineage counters + distinct stats (approx at scale)
     spark = triples.sparkSession
-    written = spark.read.parquet(out_path)
-    stats = written.select(
-        F.approx_count_distinct("graph").alias("n_graphs"),
-        F.approx_count_distinct("subj").alias("n_subjects"),
-    ).first()
-    metrics["n_graphs"] = int(stats["n_graphs"])
-    metrics["n_subjects"] = int(stats["n_subjects"])
-    lineage = written.groupBy("pred_name", "subj_bucket").agg(
-        F.count(F.lit(1)).alias("rows")
+    lineage_path = out_path + "_lineage"
+    (
+        spark.read.parquet(out_path)
+        .groupBy("pred_name", "subj_bucket")
+        .agg(F.count(F.lit(1)).alias("rows"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(lineage_path)
     )
-    lineage.coalesce(1).write.mode("overwrite").parquet(out_path + "_lineage")
-    metrics["n_partitions"] = lineage.count()
+    metrics["n_partitions"] = spark.read.parquet(lineage_path).count()
 
     with open(os.path.join(out_path, "_metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2, sort_keys=True)
@@ -108,14 +127,9 @@ def materialize_triples_iceberg(
     equivalents: Iceberg adds snapshot isolation + hidden partitioning on
     top of the identical physical layout.
     """
-    df = (
-        dedup_quads(triples)
-        .withColumn("pred_name", pred_short_name(F.col("pred")))
-        .withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)).cast("int"))
-    )
     try:
         (
-            df.writeTo(table)
+            _layout_quads(triples, buckets).writeTo(table)
             .partitionedBy("pred_name", "subj_bucket")
             .using("iceberg")
             .createOrReplace()

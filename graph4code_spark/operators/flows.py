@@ -177,9 +177,10 @@ extraction per snippet, emitting the reference's node/edge vocabulary —
   evaluates on the pre path, so placement is exact for `if` and the
   walrus-style one-unrolling approximation for `while`; chains unwind
   recursively (`if df.isnull().sum() > 0:`).  Subset: dotted callees
-  only (`len(df.dropna())` hoists the inner call, not len), `elif`
-  heads stay out (a hoist between chain arms would break the open
-  frame), string literals skipped by quote parity
+  only (`len(df.dropna())` hoists the inner call, not len); `elif`
+  heads hoist too, with the one-unrolling placement the walrus hoist
+  takes mid-chain (the hoisted binding chains before the arm); string
+  literals skipped by quote parity
 - subscript-write chain RHS (final r5): `df['z'] = df['a'].apply(str)`
   hoists the RHS chain into a temp (the chain desugar splits it), so
   the field read + chain-final call mint AND the existing
@@ -378,12 +379,14 @@ def _in_inert_string(line: str, pos: int) -> bool:
     """True when ``pos`` sits inside string-literal TEXT — a plain
     literal, or an f-string outside its brace regions.  Code inside
     f-string braces evaluates (`f'{df.shape}'` is a real read); code
-    inside plain quotes is text (`'df.empty'` is not)."""
+    inside plain quotes is text (`'df.empty'` is not).  Escaped braces
+    (`{{`/`}}`) are literal text and open no region: `f'{{df.empty}}'`
+    is inert."""
     for m in _STRING_LIT_RE.finditer(line):
         if m.start(2) <= pos < m.end(2):
             if not m.group(1):
                 return True
-            seg = line[m.start(2):pos]
+            seg = line[m.start(2):pos].replace("{{", "").replace("}}", "")
             return seg.count("{") - seg.count("}") <= 0
     return False
 

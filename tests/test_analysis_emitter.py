@@ -2788,6 +2788,12 @@ def test_string_literal_reads_inert():
     assert reads_of("s = f'{df.shape}'\n") == [
         {"container": None, "field": "shape"}]
     assert reads_of("s = f'df.empty is {1}'\n") == []
+    # escaped braces are literal text (ADVICE #2); a real region stays live
+    assert reads_of("s = f'{{df.empty}}'\n") == []
+    assert reads_of("s = f'{{x}} {df.shape}'\n") == [
+        {"container": None, "field": "shape"}]
+    assert reads_of("s = f'{{{df.shape}}}'\n") == [
+        {"container": None, "field": "shape"}]
 
 
 def test_comments_and_string_calls_inert():
@@ -2795,7 +2801,8 @@ def test_comments_and_string_calls_inert():
     a commented-out call mints nothing, a trailing comment no longer
     breaks the anchored desugars or the paren-depth joiner — and a call
     spelled inside a plain string/docstring is text (f-string braces
-    stay live).  `#` inside a string literal is kept."""
+    stay live, escaped `{{`/`}}` do not).  `#` inside a string literal
+    is kept."""
     from graph4code_spark.operators.flows import (
         build_flow_catalog,
         extract_page_flow_nodes,
@@ -2822,6 +2829,10 @@ def test_comments_and_string_calls_inert():
         ["import pandas\ns = 'pandas.read_csv(x)'\n"
          "df = pandas.read_csv('a#b.csv')\n"], cat)
     assert [n["path"][-1] for n in s] == ["pandas", "read_csv"]
+    esc = extract_page_flow_nodes(
+        "http://q/5",
+        ["import pandas\ns = f'{{pandas.read_csv(x)}}'\n"], cat)
+    assert [n["path"][-1] for n in esc] == ["pandas"]
     doc = extract_page_flow_nodes(
         "http://q/4",
         ["import pandas\ndef f():\n"

@@ -1,8 +1,10 @@
 """Pipeline end-to-end + checkpoint/resume invariants."""
 
+import glob
 import json
 import os
 
+from graph4code_spark.materialize import materialize_triples, read_triples
 from graph4code_spark.plans.pipeline import PipelineConfig, StageRunner, run_pipeline
 from graph4code_spark.synth import synth_pages
 
@@ -42,26 +44,66 @@ def test_pipeline_runs_and_resumes(spark, tmp_path):
     assert runner is not None
 
 
+def _assert_layout_and_metrics(spark, path, metrics):
+    """One parquet file per (pred_name, subj_bucket) directory, and the
+    persisted metrics/lineage agree with the table read back."""
+    from pyspark.sql import functions as F
+
+    assert json.load(open(os.path.join(path, "_metrics.json"))) == metrics
+    dirs = glob.glob(os.path.join(path, "pred_name=*", "subj_bucket=*"))
+    assert dirs
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert metrics["n_partitions"] == len(dirs)
+
+    t = spark.read.parquet(path)
+    # HLL++ sketches merge order-independently, so the observed
+    # approximations equal a recount over the written table exactly
+    back = t.select(
+        F.count(F.lit(1)).alias("n_triples"),
+        F.approx_count_distinct("graph").alias("n_graphs"),
+        F.approx_count_distinct("subj").alias("n_subjects"),
+    ).first().asDict()
+    assert {k: metrics[k] for k in back} == back
+
+    lineage = spark.read.parquet(path + "_lineage")
+    assert lineage.count() == metrics["n_partitions"]
+    assert lineage.agg(F.sum("rows")).first()[0] == metrics["n_triples"]
+
+    # no duplicate quads in the final table
+    assert metrics["n_triples"] == t.dropDuplicates(
+        ["subj", "pred", "obj", "is_literal", "arg_pos", "arg_name", "graph"]
+    ).count()
+
+
 def test_materialize_layout_and_metrics(spark, tmp_path):
     out = str(tmp_path / "kg2")
     pages = synth_pages(spark, 40, seed=12)
     run_pipeline(spark, pages, PipelineConfig(out_dir=out))
 
-    metrics = json.load(open(os.path.join(out, "triples", "_metrics.json")))
+    path = os.path.join(out, "triples")
+    metrics = json.load(open(os.path.join(path, "_metrics.json")))
     assert metrics["n_triples"] > 0
     assert metrics["n_graphs"] >= 2  # docstrings + forum (+ per-page flow graphs)
+    _assert_layout_and_metrics(spark, path, metrics)
 
-    # partitioned layout: pred_name=<x>/subj_bucket=<n>
-    top = os.listdir(os.path.join(out, "triples"))
-    assert any(d.startswith("pred_name=") for d in top)
-    lineage = spark.read.parquet(os.path.join(out, "triples_lineage"))
-    assert lineage.count() == metrics["n_partitions"]
-
-    # no duplicate quads in the final table
-    t = spark.read.parquet(os.path.join(out, "triples"))
-    assert t.count() == t.dropDuplicates(
-        ["subj", "pred", "obj", "is_literal", "arg_pos", "arg_name", "graph"]
-    ).count()
+    # a full self-union collapses back to the same quad set and metrics;
+    # uncoalesced shuffle partitions spread the quads over several write
+    # tasks, which must still leave one file per directory
+    quads = read_triples(spark, path)
+    again = str(tmp_path / "again")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        metrics2 = materialize_triples(quads.unionAll(quads), again)
+    finally:
+        spark.conf.set(key, prev)
+    _assert_layout_and_metrics(spark, again, metrics2)
+    metrics.pop("wall_sec")
+    metrics2.pop("wall_sec")
+    assert metrics2 == metrics
+    assert _quadset(read_triples(spark, again)) == _quadset(quads)
 
 
 def test_corpus_pipeline_resume(spark, tmp_path):

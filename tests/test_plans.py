@@ -2,11 +2,14 @@
 get (pushdown, pruning, broadcasts, no stray shuffles on narrow paths)."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from graph4code_spark.html_extract import with_extracted_text
+from graph4code_spark.materialize import materialize_triples
+from graph4code_spark.schemas import TRIPLES_SCHEMA
 from graph4code_spark.synth import synth_pages
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
@@ -57,14 +60,10 @@ def test_topk_uses_take_ordered(spark):
 
 
 def _windows(p: str) -> int:
-    import re
-
     return len(re.findall(r"\bWindow\b", p))
 
 
 def _exchanges(p: str) -> list:
-    import re
-
     return re.findall(
         r"Exchange (hashpartitioning\([^,#]*|rangepartitioning\([^,#]*|SinglePartition)", p
     )
@@ -151,3 +150,38 @@ def test_semforms_corpus_plan_pinned(spark):
     hashex = [e for e in _exchanges(p) if e.startswith("hashpartitioning")]
     assert len(hashex) == 1, hashex
     assert "SortMergeJoin" not in p
+
+
+def _written_plan(spark, path: str) -> str:
+    """Node descriptions of the final (adaptive) plan of the last write
+    into ``path``, read back from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    target = f"Execute InsertIntoHadoopFsRelationCommand file:{path}, "
+    for i in reversed(range(runs.size())):
+        nodes = store.planGraph(runs.apply(i).executionId()).allNodes()
+        descs = [nodes.apply(j).desc() for j in range(nodes.size())]
+        if any(d.startswith(target) for d in descs):
+            return "\n".join(descs)
+    raise AssertionError(f"no write into {path} in the SQL status store")
+
+
+def test_materialize_write_shuffles_once_on_layout(spark, tmp_path):
+    """The quad table write has exactly one Exchange, hash-partitioned
+    on the output layout (pred_name, subj_bucket): the dedup aggregate
+    reuses it instead of shuffling again on the full quad key, so each
+    partition directory has a single writer."""
+    quads = [
+        ("http://g/s%d" % i, pred, "o%d" % i, True, None, None, "http://g/g1")
+        for i in range(40)
+        for pred in ("http://x/flowsTo", "http://y#label")
+    ]
+    df = spark.createDataFrame(quads, TRIPLES_SCHEMA)
+    out = str(tmp_path / "t")
+    metrics = materialize_triples(df.unionAll(df), out, buckets=4)
+    assert metrics["n_triples"] == len(quads)
+    p = _written_plan(spark, out)
+    assert _exchanges(p) == ["hashpartitioning(pred_name"], p
+    assert re.search(
+        r"Exchange hashpartitioning\(pred_name#\d+, subj_bucket#\d+, \d+\)", p), p
