@@ -8,21 +8,21 @@ Prints ONE JSON line:
    "scaling": {"low": {...}, "high": {...}, "efficiency": ...,
                "max_cores": {...}}}
 
-Scaling methodology (round 3). The north rule's criterion is throughput
-scaling efficiency ≥ 0.8 from N to 4N executors.  This sandbox has 32
-vCPUs, but 8→32 raw-CPU scaling tops out at ~2.6×/4× (SMT/steal), so the
-N→4N pair is measured at 2→8 cores, as INTERLEAVED ladders (levels
-round-robin, REPEATS recorded ladders after a warm one, min-wall per
-level — the VM bursts 2-4× in multi-minute windows; interleaving spreads
-bursts across all levels and min drops them).  local[32] is reported as
-max-parallelism headline throughput.
+Scaling protocol: each level is a real ``spark-submit --py-files`` run
+of ``jobs/run_pipeline.py --bench 1`` in a fresh JVM, timing the whole
+``run_pipeline`` spine (all eight stages plus materialize) into a fresh
+temp out_dir.  The north rule's criterion is throughput scaling
+efficiency >= 0.8 from N to 4N executors; the N->4N pair is measured at
+2->8 cores with the levels interleaved and min-wall per level (the VM
+bursts 2-4x in multi-minute windows).  local[$SPARK_GRAFT_CPUS] is
+reported as max-parallelism headline throughput.
 
 Round-3 changes, driven by the event-log attribution
 (jobs/profile_scaling.py + jobs/scaling_controls.py, table in BENCH.md):
 - the 2→8 pair is the ONLY reported pair (ADVICE r2: picking the better
   of two pairs was favorable selection; the 1-core baseline's per-task
   overhead flattered 1→4 anyway), and
-- the input tripled to 96k pages (REPEATS=5 ladders): profiling showed ~10 s of
+- the input tripled to 96k pages: profiling showed ~10 s of
   core-count-independent driver wall (plan analysis + job setup) per
   run, a Amdahl term that distorted the ratio at 32k pages.
 The remaining measured gap is machine memory bandwidth: independent
@@ -45,7 +45,6 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "96000"))
-REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
 
 HEADLINE = [
     "kg_mentions",
@@ -79,65 +78,6 @@ HEADLINE = [
     # corpus spine (extraction at volume, the top_modules_volume shape)
     "semforms_corpus",
 ]
-
-
-def _pipeline_triples(spark, n_pages: int) -> int:
-    """In-memory pipeline for throughput measurement.  qa and links are
-    cached — mirroring the staged pipeline, which materializes both as
-    checkpoint tables between stages."""
-    from graph4code_spark.emitters.forum import forum_triples
-    from graph4code_spark.materialize import dedup_quads
-    from graph4code_spark.operators.linking import link_entities
-    from graph4code_spark.sources.qa import extract_qa
-    from graph4code_spark.synth import FIXED_CATALOG, synth_pages
-
-    pages = synth_pages(spark, n_pages, seed=42, partitions=max(64, n_pages // 250))
-    qa = extract_qa(pages).cache()
-    links = link_entities(qa, FIXED_CATALOG).cache()
-    triples = dedup_quads(forum_triples(links, qa, FIXED_CATALOG))
-    n = triples.count()
-    qa.unpersist()
-    links.unpersist()
-    return n
-
-
-def pipeline_ladders(cores_list, n_pages: int, ladders: int = REPEATS) -> dict:
-    """Interleaved-ladder measurement in ONE process: run the levels
-    round-robin (1,2,4,8,32, 1,2,4,8,32, ...) and keep the per-level min.
-
-    Why interleaved: this VM bursts/throttles in multi-minute windows
-    (observed 20%+ swings between identical runs).  Measuring each level
-    in its own contiguous window lets one throttle window clobber one
-    level and silently skew the N-to-4N ratio in either direction;
-    round-robin ladders spread any burst across ALL levels, and min-wall
-    per level drops the throttled samples (noise only ever slows a run).
-    Ladder 0 is an unrecorded warm pass (JIT/codegen is JVM-wide); the
-    master switches per ladder step via a fresh session."""
-    from graph4code_spark.session import get_spark, stop_all
-
-    best: dict[int, float] = {}
-    n = 0
-    for rep in range(ladders + 1):  # +1: warm ladder
-        for cores in cores_list:
-            spark = get_spark(
-                f"g4c-bench-{cores}", master=f"local[{cores}]",
-                extra_conf={"spark.sql.shuffle.partitions": str(max(cores, 8))},
-            )
-            t0 = time.time()
-            n = _pipeline_triples(spark, n_pages)
-            w = time.time() - t0
-            stop_all()
-            if rep == 0:
-                continue
-            best[cores] = min(best.get(cores, w), w)
-    return {
-        str(c): {
-            "cores": c, "pages": n_pages, "triples": n,
-            "sec": round(best[c], 3),
-            "triples_per_sec": round(n / best[c], 1),
-        }
-        for c in cores_list
-    }
 
 
 #: controls gate (VERDICT r4 #1): BENCH_r04 was recorded in a throttled
@@ -181,14 +121,11 @@ def _wait_for_quiet_window() -> tuple[dict | None, bool, int]:
     return ctrl, False, GATE_ATTEMPTS
 
 
-#: scaling protocol of record (round 5, VERDICT r4 #1's blessed
-#: alternative): the north rule's own launch mode — each level is a real
-#: ``spark-submit --py-files`` run in a FRESH JVM, so no session state
-#: leaks between levels and the measurement is literally the command a
-#: cluster operator would time.  ``SPARK_GRAFT_BENCH_PROTOCOL=ladder``
-#: keeps the round-3/4 in-process interleaved-ladder protocol available
-#: as a same-session cross-check.
-PROTOCOL = os.environ.get("SPARK_GRAFT_BENCH_PROTOCOL", "submit")
+#: scaling protocol (VERDICT r4 #1's blessed alternative): the north
+#: rule's own launch mode — each level is a real ``spark-submit
+#: --py-files`` run in a FRESH JVM, so no session state leaks between
+#: levels and the measurement is literally the command a cluster
+#: operator would time.
 SUBMIT_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_SUBMIT_REPS", "2"))
 
 _SPARK_SUBMIT = (
@@ -205,8 +142,7 @@ def _submit_levels(cores_list, n_pages: int, reps: int = SUBMIT_REPS) -> dict:
     VM throttle window spreads across all levels instead of clobbering
     one; min-wall per level (noise only ever slows a run).  Each submit
     warms in-JVM once before its recorded pass (run_pipeline.py --bench),
-    so JVM/JIT startup is excluded from the measured wall exactly as the
-    ladder protocol excluded it via the warm ladder."""
+    so JVM/JIT startup is excluded from the measured wall."""
     import shutil as _sh
 
     os.makedirs(os.path.join(REPO, "dist"), exist_ok=True)
@@ -256,33 +192,21 @@ def _submit_levels(cores_list, n_pages: int, reps: int = SUBMIT_REPS) -> dict:
 
 def _run_scaling() -> dict:
     """One N-to-4N pair, 2→8 cores (ADVICE r2: a single pre-declared
-    pair, no favorable selection).  Round 5: measured in SUBMIT mode by
-    default (fresh JVM per level, the north rule's launch mode); the
-    round-3/4 in-process interleaved ladder stays selectable via
-    ``SPARK_GRAFT_BENCH_PROTOCOL=ladder``.  Input is 96k pages: profiling
+    pair, no favorable selection), measured in submit mode (fresh JVM per
+    level, the north rule's launch mode).  Input is 96k pages: profiling
     showed ~10 s of core-count-independent driver wall (plan analysis +
     job setup) per run, an Amdahl term that distorted the ratio at 32k
     pages (see BENCH.md)."""
     cores_list = [2, 8, CPUS]
-    # the gate brackets the ladder: a PRE sample admits the window and a
-    # POST sample validates it — a throttle burst opening MID-ladder
+    # the gate brackets the levels: a PRE sample admits the window and a
+    # POST sample validates it — a throttle burst opening MID-run
     # (observed: pre 0.92 → post 0.10) invalidates the measurement, so
-    # the whole ladder re-runs on a fresh window (bounded retries; the
+    # the whole run repeats on a fresh window (bounded retries; the
     # last attempt is recorded either way, with its controls attached so
     # a contaminated record is self-describing)
-    for _ladder_try in range(3):
+    for _attempt in range(3):
         pre_ctrl, gate_ok, attempts = _wait_for_quiet_window()
-        if PROTOCOL == "submit" and os.path.exists(_SPARK_SUBMIT):
-            levels = _submit_levels(cores_list, N_PAGES)
-            protocol = "spark-submit"
-        else:
-            out_run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--ladders",
-                 ",".join(map(str, cores_list)), str(N_PAGES), str(REPEATS)],
-                capture_output=True, text=True, cwd=REPO, timeout=2700,
-            )
-            levels = json.loads(out_run.stdout.strip().splitlines()[-1])
-            protocol = "in-process-ladder"
+        levels = _submit_levels(cores_list, N_PAGES)
         post_ctrl = _measure_controls()
         if (gate_ok and post_ctrl
                 and post_ctrl["membw_efficiency"] >= GATE_MEMBW):
@@ -297,7 +221,7 @@ def _run_scaling() -> dict:
         )
 
     out = {
-        "protocol": protocol,
+        "protocol": "spark-submit",
         "low": levels["2"],
         "high": levels["8"],
         "levels": {k: v for k, v in levels.items() if int(k) != CPUS},
@@ -308,7 +232,7 @@ def _run_scaling() -> dict:
 
     # Same-session hardware controls (VERDICT r3 #5): perfectly parallel
     # no-Spark workloads measured in the SAME machine state as the
-    # pipeline ladders — once before (the gate sample) and once after,
+    # pipeline levels — once before (the gate sample) and once after,
     # bracketing the measurement window.  `efficiency_adjusted` =
     # raw / membw-control — how close the pipeline gets to what this
     # machine's shared memory controller allows a bandwidth-bound
@@ -343,7 +267,7 @@ def main() -> None:
 
     scaling = _run_scaling()
 
-    # gate the headline suite on its own quiet window (the ladder run
+    # gate the headline suite on its own quiet window (the scaling run
     # above can outlive the window the scaling gate sampled)
     head_ctrl, head_gate_ok, head_attempts = _wait_for_quiet_window()
 
@@ -353,7 +277,7 @@ def main() -> None:
     for name in HEADLINE:
         qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
         best = float("inf")
-        for _ in range(2):  # min-of-2, same rationale as the ladder min-wall
+        for _ in range(2):  # min-of-2, same rationale as the per-level min-wall
             t0 = time.time()
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
@@ -390,16 +314,15 @@ def _write_bench_md(result: dict) -> None:
         "## KG pipeline throughput at two parallelism levels",
         "",
         "Same deterministic page corpus, same job, protocol ="
-        f" **{s.get('protocol', 'in-process-ladder')}**: each level is a"
+        f" **{s['protocol']}**: each level is a"
         " real `spark-submit --py-files` run in a fresh JVM (the north"
-        f" rule's launch mode), {SUBMIT_REPS} submits per level with the",
+        " rule's launch mode) timing the whole `run_pipeline` spine (all",
+        "eight stages plus materialize) into a fresh out_dir,"
+        f" {SUBMIT_REPS} submits per level with the",
         "LEVELS interleaved (2,8,32, 2,8,32) so a VM throttle window",
         "spreads across all levels instead of clobbering one; min-wall",
         "per level; each submit warms in-JVM before its recorded pass.",
-        "The round-3/4 in-process interleaved-ladder protocol stays",
-        "available via SPARK_GRAFT_BENCH_PROTOCOL=ladder as a",
-        "same-session cross-check. local[N] threads stand in for",
-        "executors per BASELINE.md.",
+        "local[N] threads stand in for executors per BASELINE.md.",
         "",
         "**Why the low core range:** measured raw-CPU scaling on this VM",
         "(independent busy-loop processes, no Spark) is near-linear up to",
@@ -436,8 +359,8 @@ def _write_bench_md(result: dict) -> None:
         "8 procs). The rest of the gap is the ~10 s core-count-independent",
         "driver wall — an input-size artifact, addressed by doubling the",
         "bench input to 64k pages. Variants: serialized cache and no-cache",
-        "both measured WORSE (run_s inflation 1.50×/1.48× — more bytes",
-        "moved); the deserialized cache the bench uses is the right call.",
+        "both measured WORSE than the deserialized cache of the round-3",
+        "forum-only job (run_s inflation 1.50×/1.48× — more bytes moved).",
         "",
         "Round-4 re-profile (same protocol, fused linking, 32k pages,",
         "single shot): run_s 85.3→137.9 (1.62× inflation 2→8) on a session",
@@ -535,7 +458,7 @@ def _write_bench_md(result: dict) -> None:
         f" membw-control ≥ {s.get('controls_gate', {}).get('threshold', 0.8)};"
         f" passed={s.get('controls_gate', {}).get('passed', '—')} after"
         f" {s.get('controls_gate', {}).get('attempts', '—')} attempt(s)"
-        " (pre/post samples bracket the ladder; the min is used below).",
+        " (pre/post samples bracket the levels; the min is used below).",
         f"- same-session controls: pure-ALU {s.get('controls', {}).get('cpu_efficiency', '—')},"
         f" memory-bandwidth {s.get('controls', {}).get('membw_efficiency', '—')}.",
         f"- `efficiency_adjusted` (raw / bandwidth control, the"
@@ -552,8 +475,8 @@ def _write_bench_md(result: dict) -> None:
         "the spread tracks the VM's burst-credit state",
         "(after hours of sustained 32-core load, steal time penalizes",
         "the multi-core levels more than the low ones; the same runs'",
-        "headline queries slowed 2-3x wholesale). The interleaved-ladder",
-        "protocol removes per-level window bias; it cannot remove",
+        "headline queries slowed 2-3x wholesale). Interleaving the levels",
+        "removes per-level window bias; it cannot remove",
         "sustained throttling. Treat the number as a lower bound tied to",
         "machine state at run time; the attribution below bounds what",
         "this machine can give a bandwidth-bound workload (~0.76).",
@@ -579,10 +502,4 @@ def _write_bench_md(result: dict) -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--ladders":
-        print(json.dumps(pipeline_ladders(
-            [int(c) for c in sys.argv[2].split(",")],
-            int(sys.argv[3]), int(sys.argv[4]),
-        )))
-    else:
-        main()
+    main()

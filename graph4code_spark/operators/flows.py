@@ -1171,13 +1171,16 @@ def _scan_triple_open(line: str):
         pos = close + 3
 
 
-def _blank_multiline_strings(lines: list[str]) -> list[str]:
-    """Blank every line INSIDE a multi-line triple-quoted string — the
-    content is text (docstrings, embedded SQL, quoted code samples),
-    and WALA's parser never sees it as statements.  Before this, code
-    spelled inside a triple-quoted block minted real nodes AND
-    bindings.  Pragmatic subset: a triple quote nested inside a
-    single-quoted literal on the same line reads as an opener."""
+def _strip_comments_and_strings(lines: list[str]) -> list[str]:
+    """Cut `# …` comments (``_strip_comment``) and blank every line
+    INSIDE a multi-line triple-quoted string — the content is text
+    (docstrings, embedded SQL, quoted code samples), and WALA's parser
+    never sees it as statements.  Before this, code spelled inside a
+    triple-quoted block minted real nodes AND bindings.  Comments are cut
+    only outside the string, so the `#` in a closing `more # '''` line
+    is string text and the string closes.  Pragmatic subset: a triple
+    quote nested inside a single-quoted literal on the same line reads as
+    an opener."""
     out: list[str] = []
     delim = None
     for line in lines:
@@ -1186,11 +1189,8 @@ def _blank_multiline_strings(lines: list[str]) -> list[str]:
             if j < 0:
                 out.append("")
                 continue
-            delim = None
-            kept, delim = _scan_triple_open(line[j + 3:])
-            out.append(kept)
-            continue
-        kept, delim = _scan_triple_open(line)
+            line = line[j + 3:]
+        kept, delim = _scan_triple_open(_strip_comment(line))
         out.append(kept)
     return out
 
@@ -1202,9 +1202,7 @@ def _logical_lines(lines: list[str]):
     records firstLine != lastLine for such calls).  Comments strip per
     physical line (quote-aware) and multi-line triple-quoted string
     interiors blank before depth counting and statement assembly."""
-    stripped = _blank_multiline_strings(
-        [_strip_comment(l) for l in lines]
-    )
+    stripped = _strip_comments_and_strings(lines)
     out: list[tuple[int, list[str], str]] = []
     i, n = 0, len(lines)
     while i < n:

@@ -6,6 +6,10 @@
 Every stage writes parquet + a manifest fingerprint via StageRunner, so
 a job killed after stage k resumes by READING stages 1..k back instead
 of recomputing them (north rule: per-stage lineage + resumability).
+The fingerprints are content-addressed: ``01_redacted`` is keyed on a
+digest of the input documents and every later stage chains its
+upstream's fingerprint, so new documents, config or code in the same
+``out_dir`` recompute every stage they reach instead of resuming it.
 The parquet boundaries are also where a 100 TB run wants its barriers:
 the redacted table is the reusable corpus-of-record, the cleaned table
 is what the tokenizer consumes, the packed table is the training
@@ -14,8 +18,6 @@ manifest.
 
 from __future__ import annotations
 
-import hashlib
-import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,7 +30,7 @@ from graph4code_spark.operators.scrub import (
     pii_features,
 )
 from graph4code_spark.operators.textstats import whitespace_token_count
-from graph4code_spark.plans.pipeline import StageRunner
+from graph4code_spark.plans.pipeline import StageRunner, content_hash, frame_digest
 
 
 @dataclass
@@ -42,11 +44,7 @@ class CorpusConfig:
     seq_len: int = 64            # packing sequence length
 
     def fingerprint(self) -> str:
-        basis = json.dumps(
-            {k: v for k, v in self.__dict__.items() if k != "out_dir"},
-            sort_keys=True,
-        )
-        return hashlib.md5(basis.encode()).hexdigest()[:12]
+        return content_hash({k: v for k, v in self.__dict__.items() if k != "out_dir"})
 
 
 def run_corpus_pipeline(
@@ -62,11 +60,13 @@ def run_corpus_pipeline(
     if stats is not None:
         stats["executed"] = runner.executed
 
+    src = docs.select("doc_id", "text")
     red = runner.run(
         "01_redacted",
-        lambda: pii_features(docs.select("doc_id", "text"), "text").select(
+        lambda: pii_features(src, "text").select(
             "doc_id", F.col("text_redacted").alias("rt")
         ),
+        key=frame_digest(src),
     )
 
     def _decontaminate():

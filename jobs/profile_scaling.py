@@ -1,8 +1,9 @@
 """Stage-level attribution of the N→4N scaling gap (VERDICT r2 #4).
 
-Runs the bench pipeline at two parallelism levels with Spark event
-logging on, parses the event log, and prints per-level task-metric
-aggregates:
+Runs the whole ``run_pipeline`` spine (all eight stages plus
+materialize, into a fresh temp out_dir) at two parallelism levels with
+Spark event logging on, parses the event log, and prints per-level
+task-metric aggregates:
 
 - wall: driver-measured wall seconds
 - run_s: sum of executorRunTime over all tasks (CPU-ish work)
@@ -16,12 +17,10 @@ is burning more CPU at higher parallelism — memory-bandwidth / SMT /
 steal contention, not a Spark-plan problem.  If run_s is flat but
 occupancy drops, the pipeline has scheduling gaps / barriers.
 
-Variants (--variant): cache (bench default, MEMORY_AND_DISK deserialized),
-ser (StorageLevel.MEMORY_AND_DISK, serialized in Spark 4, for both),
-nocache (recompute qa/links instead of caching).
+Per-stage attribution of one spine call (spans per stage, rows, task
+CPU, shuffle, spill) is ``perfbench/run.py --trace 1``.
 
 Usage:  python jobs/profile_scaling.py [cores ...] [--pages N]
-                                       [--variant cache|ser|nocache]
 Prints one JSON line per level plus a summary table.
 """
 
@@ -38,15 +37,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def run_level(cores: int, n_pages: int, variant: str) -> dict:
-    from pyspark import StorageLevel
-
-    from graph4code_spark.emitters.forum import forum_triples
-    from graph4code_spark.materialize import dedup_quads
-    from graph4code_spark.operators.linking import link_entities
+def run_level(cores: int, n_pages: int) -> dict:
+    from graph4code_spark.plans.pipeline import PipelineConfig, run_pipeline
     from graph4code_spark.session import get_spark, stop_all
-    from graph4code_spark.sources.qa import extract_qa
-    from graph4code_spark.synth import FIXED_CATALOG, synth_pages
+    from graph4code_spark.synth import synth_pages
 
     evdir = tempfile.mkdtemp(prefix=f"spark-ev-{cores}-")
     spark = get_spark(
@@ -62,17 +56,8 @@ def run_level(cores: int, n_pages: int, variant: str) -> dict:
     )
     t0 = time.time()
     pages = synth_pages(spark, n_pages, seed=42, partitions=max(64, n_pages // 250))
-    qa = extract_qa(pages)
-    if variant == "cache":
-        qa = qa.cache()
-    elif variant == "ser":
-        qa = qa.persist(StorageLevel.MEMORY_AND_DISK)  # serialized in Spark 4
-    links = link_entities(qa, FIXED_CATALOG)
-    if variant == "cache":
-        links = links.cache()
-    elif variant == "ser":
-        links = links.persist(StorageLevel.MEMORY_AND_DISK)  # serialized
-    n = dedup_quads(forum_triples(links, qa, FIXED_CATALOG)).count()
+    with tempfile.TemporaryDirectory(prefix=f"g4c-profile-{cores}-") as out_dir:
+        n = run_pipeline(spark, pages, PipelineConfig(out_dir=out_dir)).count()
     wall = time.time() - t0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     stop_all()
@@ -127,7 +112,7 @@ def run_level(cores: int, n_pages: int, variant: str) -> dict:
                 )
     shutil.rmtree(evdir, ignore_errors=True)
     out = {
-        "cores": cores, "pages": n_pages, "variant": variant, "triples": n,
+        "cores": cores, "pages": n_pages, "triples": n,
         "wall_s": round(wall, 2),
         "run_s": round(agg["run_ms"] / 1000, 1),
         "gc_s": round(agg["gc_ms"] / 1000, 1),
@@ -151,14 +136,11 @@ def run_level(cores: int, n_pages: int, variant: str) -> dict:
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     pages = 32000
-    variant = "cache"
     cores_list = []
     i = 0
     while i < len(args):
         if args[i] == "--pages":
             pages = int(args[i + 1]); i += 2
-        elif args[i] == "--variant":
-            variant = args[i + 1]; i += 2
         else:
             cores_list.append(int(args[i])); i += 1
     cores_list = cores_list or [2, 8]
@@ -168,7 +150,7 @@ def main() -> None:
         # between levels
         out = os.popen(
             f"{sys.executable} {os.path.abspath(__file__)} --one {c} "
-            f"--pages {pages} --variant {variant}"
+            f"--pages {pages}"
         ).read()
         line = [l for l in out.strip().splitlines() if l.startswith("{")][-1]
         results.append(json.loads(line))
@@ -180,7 +162,6 @@ if __name__ == "__main__":
         idx = sys.argv.index("--one")
         cores = int(sys.argv[idx + 1])
         pages = int(sys.argv[sys.argv.index("--pages") + 1])
-        variant = sys.argv[sys.argv.index("--variant") + 1]
-        run_level(cores, pages, variant)
+        run_level(cores, pages)
     else:
         main()

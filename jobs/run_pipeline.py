@@ -25,6 +25,7 @@ import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 
 
@@ -41,8 +42,8 @@ def main() -> None:
     ap.add_argument("--cap", type=int, default=5000, help="per-entity result cap (W4)")
     ap.add_argument("--buckets", type=int, default=8, help="subject-hash write buckets")
     ap.add_argument("--bench", type=int, default=0, metavar="R",
-                    help="throughput mode: skip the checkpointed write, run the "
-                         "in-memory pipeline R times after a warm-up and report "
+                    help="throughput mode: run the whole pipeline R times after a "
+                         "warm-up, each into a fresh temp out-dir, and report "
                          "best-of-R triples/sec (the N-vs-4N scaling probe)")
     ap.add_argument("--corpus", default=None, metavar="DOCS_PARQUET",
                     help="run the CORPUS-HYGIENE pipeline instead of the KG one: "
@@ -101,21 +102,15 @@ def main() -> None:
     else:
         pages = synth_pages(spark, args.pages, seed=args.seed)
 
-    if args.bench > 0:
-        from graph4code_spark.emitters.forum import forum_triples
-        from graph4code_spark.materialize import dedup_quads
-        from graph4code_spark.operators.linking import link_entities
-        from graph4code_spark.sources.qa import extract_qa
-        from graph4code_spark.synth import FIXED_CATALOG
+    def config(out_dir: str) -> PipelineConfig:
+        return PipelineConfig(out_dir=out_dir, cap=args.cap, buckets=args.buckets)
 
+    if args.bench > 0:
         def once() -> tuple[int, float]:
-            t0 = time.time()
-            qa = extract_qa(pages).cache()
-            links = link_entities(qa, FIXED_CATALOG).cache()
-            n = dedup_quads(forum_triples(links, qa, FIXED_CATALOG)).count()
-            qa.unpersist()
-            links.unpersist()
-            return n, time.time() - t0
+            with tempfile.TemporaryDirectory(prefix="g4c-bench-") as out_dir:
+                t0 = time.time()
+                n = run_pipeline(spark, pages, config(out_dir)).count()
+                return n, time.time() - t0
 
         once()  # warm: spawns workers, JITs
         best = min((once() for _ in range(args.bench)), key=lambda x: x[1])
@@ -130,9 +125,8 @@ def main() -> None:
         return
 
     t0 = time.time()
-    cfg = PipelineConfig(out_dir=args.out_dir, cap=args.cap, buckets=args.buckets)
     stats: dict = {}
-    triples = run_pipeline(spark, pages, cfg, stats=stats)
+    triples = run_pipeline(spark, pages, config(args.out_dir), stats=stats)
     n = triples.count()
     wall = time.time() - t0
 

@@ -2866,6 +2866,14 @@ def test_multiline_string_interiors_inert():
          "    example: pandas.read_csv('x.csv')\n    '''\n    return 1\n"],
         cat)
     assert [n["path"][-1] for n in doc] == ["pandas"]
+    # ADVICE #1: a `#` before the closing delimiter is string text, so the
+    # string closes and the code after it still tracks
+    closing = extract_page_flow_nodes(
+        "http://q/3",
+        ['import pandas as pd\ns = """text\nmore # """\n'
+         'df = pd.read_csv("a.csv")\n'],
+        cat)
+    assert [n["path"][-1] for n in closing] == ["pandas", "read_csv"]
 
 
 def test_repl_transcript_repair():

@@ -135,3 +135,72 @@ def test_corpus_pipeline_resume(spark, tmp_path):
     third = run_corpus_pipeline(spark, docs, cfg, stats=s3)
     assert s3["executed"] == ["03_cleaned", "04_packed"]
     assert sorted(tuple(r) for r in third.collect()) == rows1
+
+
+def test_resume_is_content_addressed(spark, tmp_path, monkeypatch):
+    """One out_dir, 30-page corpora: a stage resumes only when its code,
+    config, own inputs and upstream fingerprints all match."""
+    import pytest
+
+    from graph4code_spark.plans import pipeline
+    from graph4code_spark.synth import FIXED_CATALOG
+
+    shared = str(tmp_path / "shared")
+
+    def run(seed, out=shared, **cfg):
+        stats: dict = {}
+        quads = _quadset(run_pipeline(
+            spark, synth_pages(spark, 30, seed=seed), PipelineConfig(out_dir=out, **cfg),
+            stats=stats))
+        return quads, stats["executed"]
+
+    seed1, _ = run(1)
+
+    # a seed-2 run dies in 02_links after rewriting 01_qa; the rerun must
+    # not resume the seed-1 stages downstream of the rewritten table
+    def boom(*args, **kwargs):
+        raise RuntimeError("killed in 02_links")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "link_entities", boom)
+        with pytest.raises(RuntimeError, match="killed in 02_links"):
+            run(2)
+    resumed, executed = run(2)
+    assert executed == [
+        "02_links", "04_forum_triples", "05_flow_nodes", "06_flow_triples", "triples"]
+    seed2, _ = run(2, out=str(tmp_path / "fresh"))
+    assert resumed == seed2 != seed1
+
+    # different pages recompute every stage that reads them, and only those
+    assert run(1) == (seed1, [
+        "01_qa", "02_links", "04_forum_triples", "05_flow_nodes", "06_flow_triples",
+        "triples"])
+
+    # an identical rerun recomputes nothing
+    assert run(1) == (seed1, [])
+
+    # a same-length catalog edit reaches every stage that reads the catalog
+    edited = [dict(FIXED_CATALOG[0], class_docstring="An edited docstring."), *FIXED_CATALOG[1:]]
+    _, executed = run(1, catalog_records=edited)
+    assert executed == [
+        "02_links", "03_doc_triples", "04_forum_triples", "05_flow_nodes",
+        "06_flow_triples", "triples"]
+
+
+def test_corpus_resume_keyed_on_docs(spark, tmp_path):
+    """Changed input documents recompute the corpus spine from
+    ``01_redacted`` instead of resuming it."""
+    from pyspark.sql import functions as F
+
+    from graph4code_spark.plans.corpus import CorpusConfig, run_corpus_pipeline
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(100)],
+        "doc_id long, text string",
+    )
+    cfg = CorpusConfig(out_dir=str(tmp_path / "corpus_out"))
+    assert run_corpus_pipeline(spark, docs, cfg).count() > 0
+    stats: dict = {}
+    run_corpus_pipeline(spark, docs.where(F.col("doc_id") % 2 == 0), cfg, stats=stats)
+    assert stats["executed"] == [
+        "01_redacted", "02_decontaminated", "03_cleaned", "04_packed"]
