@@ -1,7 +1,11 @@
-"""Driver-style correctness harness: every queries() entry with an oracle
+"""Correctness harness: every registry entry with an oracle
 is executed at sf0.01 and compared to DuckDB (row count + column names +
-order-insensitive value multiset)."""
+order-insensitive value multiset).  Each case builds only its own oracle;
+reference-backed cases skip as unverifiable when the sample graphs are
+absent."""
 
+import builtins
+import io
 import math
 import os
 from collections import Counter
@@ -42,14 +46,22 @@ def _multiset(cols, rows):
     return Counter(tuple(_canon(r[i]) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql_full().keys()))
+#: registry names with an oracle, read off the registry without building one
+ORACLE_NAMES = sorted(n for n, (_, o) in entry_mod.REGISTRY.items() if o is not None)
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.reference)
+    if n in entry_mod.REFERENCE_BACKED else n
+    for n in ORACLE_NAMES
+])
 def test_oracle_parity(spark, con, name):
-    q = entry_mod.queries_full()[name]
-    sdf = q(spark, SF_DIR)
+    sql = entry_mod.build_oracle(name)
+    sdf = entry_mod.REGISTRY[name][0](spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
 
-    odf = con.sql(entry_mod.oracle_sql_full()[name])
+    odf = con.sql(sql)
     o_cols = list(odf.columns)
     o_rows = odf.fetchall()
 
@@ -59,6 +71,29 @@ def test_oracle_parity(spark, con, name):
     if sm != om:
         diff = list((sm - om).items())[:3] + list((om - sm).items())[:3]
         raise AssertionError(f"{name}: value mismatch, e.g. {diff}")
+
+
+def test_contract_builds_without_reference(monkeypatch, tmp_path):
+    """The curated contract builds with the sample graphs pointed at an
+    empty directory, and building it opens no file at all."""
+    monkeypatch.setattr(entry_mod, "_SAMPLE_GRAPH", tmp_path)
+    opened = []
+
+    def spy(real):
+        return lambda f, *a, **k: opened.append(f) or real(f, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", spy(builtins.open))
+    monkeypatch.setattr(io, "open", spy(io.open))
+    qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
+    assert len(qs) == 50 and set(qs) == set(osql)
+    assert opened == []
+
+
+def test_reference_backed_entries_are_unverifiable_when_absent(monkeypatch, tmp_path):
+    monkeypatch.setattr(entry_mod, "_SAMPLE_GRAPH", tmp_path / "absent")
+    for name in entry_mod.REFERENCE_BACKED:
+        with pytest.raises(entry_mod.Unverifiable, match="reference absent"):
+            entry_mod.build_oracle(name)
 
 
 def test_entry_smoke(spark):
@@ -82,10 +117,8 @@ def test_curated_contract_shape():
 
 
 def test_rows_only_queries_run(spark):
-    qs = entry_mod.queries_full()
-    oracles = entry_mod.oracle_sql_full()
-    for name in qs:
-        if name in oracles:
-            continue
-        df = qs[name](spark, SF_DIR)
+    rows_only = [n for n, (_, o) in entry_mod.REGISTRY.items() if o is None]
+    assert rows_only
+    for name in rows_only:
+        df = entry_mod.REGISTRY[name][0](spark, SF_DIR)
         assert df.count() >= 0, name

@@ -1,5 +1,5 @@
 """Structural parity of the snippet flow extractor against the reference's
-shipped golden analysis graphs (`/root/reference/sample_graph/example{1,2,3}`).
+shipped golden analysis graphs (`sample_graph/example{1,2,3}`).
 
 The loader path already reproduces the golden graphs quad-for-quad from the
 shipped JSON (tests/test_golden_analysis_json.py).  This file checks the
@@ -25,21 +25,17 @@ the sample .py/.json pairs under sample_graph/ are its published output.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
 import pytest
 
+from __spark_entry__ import _SAMPLE_GRAPH as SAMPLES
 from graph4code_spark.operators.flows import (
     build_flow_catalog,
     extract_page_flow_nodes,
 )
 from graph4code_spark.synth import FIXED_CATALOG
 
-SAMPLES = Path("/root/reference/sample_graph")
-
-pytestmark = pytest.mark.skipif(
-    not SAMPLES.exists(), reason="reference sample_graph not available"
-)
+pytestmark = pytest.mark.reference
 
 
 def _role(path: list, is_import: bool) -> tuple:

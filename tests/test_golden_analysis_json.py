@@ -6,7 +6,9 @@ and emitted by `emitters/analysis.py` reproduce the reference's shipped
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
+from __spark_entry__ import _SAMPLE_GRAPH as SG
 from graph4code_spark.emitters.analysis import analysis_triples
 from graph4code_spark.nq import parse_nq_lines
 from graph4code_spark.sources.analysis_json import (
@@ -14,8 +16,6 @@ from graph4code_spark.sources.analysis_json import (
     document_nodes,
     load_analysis_json,
 )
-
-SG = "/root/reference/sample_graph"
 
 
 def _gold(spark, ex):
@@ -50,18 +50,21 @@ def test_document_nodes_skips_nulls():
     assert rows[0]["graph_uri"] == "http://github/test/test"
 
 
+@pytest.mark.reference
 def test_example1_exact_quad_parity(spark):
     gold, ours = _gold(spark, "example1"), _ours(spark, "example1")
     assert len(gold) == 615
     assert ours == gold
 
 
+@pytest.mark.reference
 def test_example3_exact_quad_parity(spark):
     gold, ours = _gold(spark, "example3"), _ours(spark, "example3")
     assert len(gold) == 664
     assert ours == gold
 
 
+@pytest.mark.reference
 def test_example2_parity_modulo_orgjson_number_strip(spark):
     """example2.nq was generated from the LIVE analysis where
     `1.0 * RBF(1.0)`'s constants were Java Doubles ("1.0"); the shipped
@@ -85,6 +88,7 @@ def test_example2_parity_modulo_orgjson_number_strip(spark):
     }
 
 
+@pytest.mark.reference
 def test_loader_row_shape(spark):
     nodes = load_analysis_json(spark, f"{SG}/example1.json").collect()
     assert len(nodes) == 95  # 100 entries, 5 null
@@ -103,6 +107,7 @@ def test_loader_row_shape(spark):
     assert rc.value_names == ["data"]
 
 
+@pytest.mark.reference
 def test_all_three_jsons_in_one_scan(spark):
     """The loader is a plain distributed text scan — all documents in one
     DataFrame, one graph per file."""

@@ -2,14 +2,16 @@
 vocabulary parity vs the reference's shipped sample graphs."""
 
 import pyspark.sql.functions as F
+import pytest
 
+from __spark_entry__ import _SAMPLE_GRAPH
 from graph4code_spark.nq import parse_nq_lines, to_nq_lines
 from graph4code_spark.schemas import TRIPLES_SCHEMA
 
-EX1 = "/root/reference/sample_graph/example1.nq"
-EX2 = "/root/reference/sample_graph/example2.nq"
-EX3 = "/root/reference/sample_graph/example3.nq"
-DOCS = "/root/reference/sample_graph/docstrings_sample.nq"
+EX1 = str(_SAMPLE_GRAPH / "example1.nq")
+EX2 = str(_SAMPLE_GRAPH / "example2.nq")
+EX3 = str(_SAMPLE_GRAPH / "example3.nq")
+DOCS = str(_SAMPLE_GRAPH / "docstrings_sample.nq")
 
 QUIRK_QUADS = [
     ("http://g/s1", "http://g/p", 'has "quotes", \n newline, \t tab, \\ backslash',
@@ -38,6 +40,7 @@ def test_roundtrip_quirk_quads(spark):
     assert not any("SIO_000116" in l for l in access)
 
 
+@pytest.mark.reference
 def test_goldens_parse_completely(spark):
     for path, want in [(EX1, 615), (EX2, 692), (EX3, 664), (DOCS, 803)]:
         raw = spark.read.text(path).where(F.trim("value") != "")
@@ -45,6 +48,7 @@ def test_goldens_parse_completely(spark):
         assert parsed.count() == want == raw.count(), path
 
 
+@pytest.mark.reference
 def test_goldens_roundtrip_identity(spark):
     for path in (EX1, EX2, EX3, DOCS):
         g = parse_nq_lines(spark.read.text(path))
@@ -52,6 +56,7 @@ def test_goldens_roundtrip_identity(spark):
         assert set(map(tuple, rt.collect())) == set(map(tuple, g.collect())), path
 
 
+@pytest.mark.reference
 def test_examples_vocabulary_and_rdfstar_shape_parity(spark):
     """example2/3 exercise the reads/slice/unpack node shapes flows.py
     added in r3/r4; all three examples share one predicate vocabulary,
@@ -94,6 +99,7 @@ def test_examples_vocabulary_and_rdfstar_shape_parity(spark):
         assert shapes[path] == expected, path
 
 
+@pytest.mark.reference
 def test_flow_vocabulary_parity(spark):
     """Every predicate our analysis emitter produces appears in
     example1.nq's vocabulary — except g4c:write, which the example script
@@ -112,6 +118,7 @@ def test_flow_vocabulary_parity(spark):
     assert "http://purl.org/twc/graph4code/read" in gold
 
 
+@pytest.mark.reference
 def test_docstrings_vocabulary_parity(spark):
     """The docstrings golden's predicate vocabulary is fully covered by
     our emitter; our extras are reference vocabulary the small sample
